@@ -281,19 +281,6 @@ def fuzzy_match(
 # Stage 3 — LLM-assisted matching (J5/UD2).
 
 
-def abbreviation_signature(name: Column) -> Column:
-    """Deterministic signature used by the stub client: first letter of
-    each word, lowercased, joined — ``"Acme Holdings Pty" -> "ahp"``.
-
-    Rationale: the reference's own test recipe builds its "LLM-shaped"
-    variants by abbreviating words of the entity name
-    (test/entity_matching_test.py:36-42), so an initials signature is
-    exactly the structure the LLM stage is meant to recover.
-    """
-    words = F.split(F.trim(F.lower(name)), r"\s+")
-    return F.array_join(F.transform(words, lambda wd: F.substring(wd, 1, 1)), "")
-
-
 def stub_llm_client(crawl_names: list[str], candidates: list[dict]) -> list[str | None]:
     """Offline deterministic stand-in for the GPT-4 call
     (transform/entity_matching.py:228-233).
@@ -536,18 +523,28 @@ def match_cascade(
 
     Cost ordering is the reference's design: cheap exact join first, fuzzy
     on the residual, optional LLM on what's left (README.md:241-263).
-    Stage outputs that feed BOTH an anti-join residual and the final
-    union are persisted (memory-and-disk, spill-safe) so neither branch
-    recomputes the stage — exchange reuse alone doesn't cover the two
-    different plan shapes.
+
+    Four frames that several branches read are persisted
+    (memory-and-disk, spill-safe), so each is computed once per action —
+    exchange reuse alone doesn't cover the different plan shapes:
+
+    * the ``cc`` and ``abr`` inputs — the cleaned-source tables the
+      reference stages once in Postgres (``pre_dwh.cleaned_*``).  Lazy,
+      ``cc`` would be re-derived by 3 branches (in the pipeline, one
+      fetch+parse per crawl page per branch) and ``abr`` by 4.
+    * the ``rule`` and (with ``enable_llm``) ``fuzzy`` stage outputs,
+      each read by an anti-join residual and by the final union.
+
+    The caller owns the cache lifetime: unpersist (or
+    ``spark.catalog.clearCache()``) after the terminal action.
     """
-    # persist(), NOT localCheckpoint (r14, reverting an r13 sweep
-    # conversion): callers attach Observation metrics upstream
-    # (pipeline.run_pipeline_observed) and a checkpoint buries the
-    # CollectMetrics node inside an RDD leaf whose materialization
-    # never fires a query-execution end event — the observed counts
-    # silently read 0.  persist keeps the observe node in the acting
-    # plan (and keeps size stats for the downstream join planning).
+    # persist(), NOT localCheckpoint (ARCHITECTURE §3b): callers attach
+    # Observation metrics upstream (pipeline.run_pipeline_observed) and
+    # a checkpoint buries the CollectMetrics node inside an RDD leaf
+    # whose materialization never fires a query-execution end event —
+    # the observed counts silently read 0.  persist keeps the observe
+    # node in the acting plan and keeps size stats for the joins below.
+    cc, abr = cc.persist(), abr.persist()
     rule = rule_based_match(cc, abr).persist()
 
     residual1 = anti_join_residual(cc, rule, "domain")

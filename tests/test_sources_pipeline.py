@@ -29,6 +29,8 @@ from firmable_company_data_pipeline_spark.sources.commoncrawl import (
 from firmable_company_data_pipeline_spark.sources.xml_abr import read_abr_xml
 
 SLUGS = ["acme-books", "bravo-builders", "cedar-farms"]
+NT_ABN = _checksum_valid_abn(12345)
+NT_NAME = "Darwin Harbour Traders"
 
 
 def _abr_xml_record(abn, status, from_date, etype, name, state, postcode):
@@ -56,6 +58,15 @@ def abr_xml_path(tmp_path_factory):
         )
     # one record with missing optional fields (NULL tolerance)
     records.append("<ABR><ABN status=\"CAN\">99999999999</ABN></ABR>")
+    # a bare <ABN> (no attributes) on a leading-zero NT postcode
+    records.append(
+        f"""<ABR><ABN>{NT_ABN}</ABN>
+  <MainEntity>
+    <NonIndividualName><NonIndividualNameText>{NT_NAME}</NonIndividualNameText></NonIndividualName>
+    <BusinessAddress><AddressDetails><State>NT</State><Postcode>0800</Postcode></AddressDetails></BusinessAddress>
+  </MainEntity>
+</ABR>"""
+    )
     (d / "part1.xml").write_text(
         "<Transfer>" + "\n".join(records) + "</Transfer>"
     )
@@ -87,7 +98,7 @@ def cc_index_path(tmp_path_factory):
 def test_read_abr_xml(spark, abr_xml_path):
     df = read_abr_xml(spark, abr_xml_path)
     rows = {r.abn: r for r in df.collect()}
-    assert len(rows) == 4
+    assert len(rows) == 5
     num = sum(ord(c) for c in SLUGS[0])
     abn0 = _checksum_valid_abn(num)
     r = rows[abn0]
@@ -100,6 +111,13 @@ def test_read_abr_xml(spark, abr_xml_path):
     # NULL tolerance for sparse record
     sparse = rows["99999999999"]
     assert sparse.entity_name is None and sparse.address is None and sparse.start_date is None
+    # declared all-string schema: the leading zero survives, and a bare
+    # <ABN> still yields its text with NULL attributes
+    nt = rows[NT_ABN]
+    assert nt.postcode == "0800" and nt.state == "NT"
+    assert nt.address == "NT 0800"
+    assert nt.entity_name == NT_NAME
+    assert nt.entity_status is None and nt.start_date is None
 
 
 def test_cc_index_and_fetch_parse(spark, cc_index_path):
@@ -294,6 +312,72 @@ def test_run_pipeline_observed_metrics(spark, cc_index_path, abr_xml_path):
     assert cc["n_rows"] == len(SLUGS) == n_out
     assert cc["n_with_abn"] == len(SLUGS)  # every stub page carries an ABN
     assert abr["n_rows"] >= len(SLUGS)
+
+
+@pytest.mark.parametrize("enable_llm", [False, True])
+def test_each_page_fetched_once(spark, tmp_path, cc_index_path, abr_xml_path, enable_llm):
+    """The cascade reads the cleaned crawl frame from three branches;
+    persisting its inputs means one fetch+parse per page, not one per
+    branch (under a network client: one ranged GET per page).  The
+    Observations sit above that materialization and must still count
+    every input row."""
+    from firmable_company_data_pipeline_spark.pipeline.run import run_pipeline_observed
+    from firmable_company_data_pipeline_spark.sources.io import write_overwrite
+
+    calls = spark.sparkContext.accumulator(0)
+
+    class CountingFetchClient(StubFetchClient):
+        def fetch(self, url, filename, offset, length):
+            calls.add(1)
+            return super().fetch(url, filename, offset, length)
+
+    df, obs = run_pipeline_observed(
+        spark, cc_index_path, abr_xml_path,
+        fetch_client=CountingFetchClient(), enable_llm=enable_llm,
+    )
+    try:
+        write_overwrite(df, str(tmp_path / "out"))
+    finally:
+        spark.catalog.clearCache()
+    n_fetchable = read_cc_index(spark, cc_index_path).count()
+    assert calls.value == n_fetchable == len(SLUGS)
+    assert obs["cleaned_cc"].get["n_rows"] == len(SLUGS)
+    # every ABR record in the fixture: the planted ones, the sparse one, NT
+    assert obs["cleaned_abr"].get["n_rows"] == len(SLUGS) + 2
+    assert spark.read.parquet(str(tmp_path / "out")).count() == len(SLUGS)
+
+
+def test_pipeline_fuzzy_matches_leading_zero_postcode(spark, tmp_path, abr_xml_path):
+    """An NT crawl page (postcode 0800, no ABN on the page) blocks with
+    the NT ABR record and fuzzy-matches it: both sides keep the leading
+    zero, so the block keys agree."""
+    slug = "darwin-harbour-trader"
+    index = tmp_path / "index.json"
+    index.write_text(
+        json.dumps(
+            {"url": f"https://www.{slug}.com.au/", "filename": "crawl-data/seg/nt.warc.gz",
+             "offset": "0", "length": "500"}
+        )
+    )
+
+    class NTFetchClient(StubFetchClient):
+        def fetch(self, url, filename, offset, length):
+            return (
+                "<html><head><title>Darwin Harbour Trader</title></head><body>"
+                "<p>Visit us in Darwin NT 0800.</p></body></html>"
+            )
+
+    try:
+        rows = run_pipeline(
+            spark, str(index), abr_xml_path, fetch_client=NTFetchClient()
+        ).collect()
+    finally:
+        spark.catalog.clearCache()
+    assert len(rows) == 1
+    r = rows[0]
+    assert r.domain == f"{slug}.com.au" and r.match_method == "fuzzy"
+    assert r.cc_postcode == r.abr_postcode == "0800"
+    assert r.abr_abn == NT_ABN and r.entity_name == NT_NAME
 
 
 def test_strip_html_pathological_cases():
